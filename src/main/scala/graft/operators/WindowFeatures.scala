@@ -101,21 +101,26 @@ object WindowFeatures {
     * single shuffle (both windows share the series partitioning).
     */
   def withRollingSlope(df: DataFrame, valueCol: String, n: Int, sw: SeriesWindow,
-                       outCol: String): DataFrame = {
-    val f = sw.rows(-(n - 1), 0)
-    val x = col("__x")
-    val c = col(valueCol)
-    df.withColumn("__x", row_number().over(sw.w).cast("double"))
-      .withColumn(outCol, {
-        val cnt = count(c).over(f).cast("double")
-        val sx = sum(x).over(f)
-        val sy = sum(c).over(f)
-        val sxy = sum(x * c).over(f)
-        val sxx = sum(x * x).over(f)
-        val den = cnt * sxx - sx * sx
-        when(den > 0, (cnt * sxy - sx * sy) / den)
-      })
+                       outCol: String): DataFrame =
+    df.withColumn("__x", rowPosition(sw))
+      .withColumn(outCol, rollingSlope(col(valueCol), col("__x"), n, sw))
       .drop("__x")
+
+  /** W7's x: the row position within the series, as a double. */
+  def rowPosition(sw: SeriesWindow): Column = row_number().over(sw.w).cast("double")
+
+  /** W7's frame sums over an already-materialized position column `x`
+    * (a [[rowPosition]] column): the slope of `c` on `x` over the
+    * trailing n rows, NULL when the frame has no spread in x. */
+  def rollingSlope(c: Column, x: Column, n: Int, sw: SeriesWindow): Column = {
+    val f = sw.rows(-(n - 1), 0)
+    val cnt = count(c).over(f).cast("double")
+    val sx = sum(x).over(f)
+    val sy = sum(c).over(f)
+    val sxy = sum(x * c).over(f)
+    val sxx = sum(x * x).over(f)
+    val den = cnt * sxx - sx * sx
+    when(den > 0, (cnt * sxy - sx * sy) / den)
   }
 
   /** W8 — rolling lag-1 autocorrelation via windowed corr
@@ -124,9 +129,12 @@ object WindowFeatures {
   def withRollingAutocorr1(df: DataFrame, valueCol: String, n: Int, sw: SeriesWindow,
                            outCol: String): DataFrame =
     df.withColumn("__lag1", lag(col(valueCol), 1).over(sw.w))
-      .withColumn(outCol, graft.functions.Funcs.nanToNull(
-        corr(col(valueCol), col("__lag1")).over(sw.rows(-(n - 1), 0))))
+      .withColumn(outCol, rollingAutocorr1(col(valueCol), col("__lag1"), n, sw))
       .drop("__lag1")
+
+  /** W8's windowed corr over an already-materialized lag-1 column. */
+  def rollingAutocorr1(c: Column, lag1: Column, n: Int, sw: SeriesWindow): Column =
+    graft.functions.Funcs.nanToNull(corr(c, lag1).over(sw.rows(-(n - 1), 0)))
 
   /** Rolling Pearson correlation of two columns over a trailing frame,
     * from explicit windowed sums (the sufficient-statistic form is

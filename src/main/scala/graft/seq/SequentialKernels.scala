@@ -94,7 +94,7 @@ object SequentialKernels {
     * window's ENSURE_REQUIREMENTS exchange). This lets a kernel ride an
     * existing series exchange instead of adding one — MapPartitions
     * reports unknown output partitioning, so the cheap order is
-    * windows-first, kernel-last (see FeatureStore.wide). */
+    * windows-first, kernel-last. */
   private def keyedFold[S](df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column],
                            valueCol: String, outCols: Seq[String],
                            assumePartitioned: Boolean = false)(

@@ -6,13 +6,7 @@ import graft.operators.FeatureStore
 class FeatureStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def weekly() = {
-    val rows = for {
-      p <- 1 to 5; s <- 1 to 2; w <- 0 until 20
-    } yield (java.sql.Date.valueOf(java.time.LocalDate.parse("2024-01-01").plusWeeks(w)),
-      p.toLong, s.toLong, if ((p + w) % 4 == 0) 0.0 else (p * 10 + w).toDouble)
-    rows.toDF("week_start", "l_partkey", "l_suppkey", "qty_sum")
-  }
+  private def weekly() = FeatureStoreTwins.syntheticWeekly(spark)
 
   test("wide produces 100+ feature columns across all four families") {
     val out = FeatureStore.wide(weekly(), Seq("l_partkey", "l_suppkey"),
@@ -53,11 +47,20 @@ class FeatureStoreSpec extends SparkSpec {
   }
 
   test("wideSelected keeps essentials and at most k + essentials columns") {
-    val out = FeatureStore.wideSelected(weekly(), Seq("l_partkey", "l_suppkey"),
-      "week_start", "qty_sum", k = 10)
-    val cols = out.columns.toSet
-    assert(Set("week_start", "l_partkey", "l_suppkey", "qty_sum").subsetOf(cols))
-    assert(out.columns.length <= 10 + 4, s"${out.columns.length} cols")
-    assert(out.columns.length > 4)
+    val keys = Seq("l_partkey", "l_suppkey")
+    val k = 10
+    val out = FeatureStore.wideSelected(weekly(), keys, "week_start", "qty_sum", k = k)
+    val essentials = keys :+ "week_start" :+ "qty_sum"
+    // the wide frame has 100+ numeric features, so exactly k are kept
+    assert(out.columns.toSeq.take(4) == essentials)
+    assert(out.columns.length == 4 + k, s"${out.columns.length} cols")
+    assert(out.columns.distinct.length == out.columns.length, out.columns.mkString(","))
+    // one row per labeled week: every series loses its last week
+    val series = weekly().select(keys.map(col): _*).distinct().count()
+    assert(out.count() == weekly().count() - series)
+    // the pick is the one the withColumn-chain store and single-row
+    // scoring make
+    assert(out.columns.toSeq.drop(4) ==
+      FeatureStoreTwins.wideSelectedPick(weekly(), keys, "week_start", "qty_sum", k))
   }
 }

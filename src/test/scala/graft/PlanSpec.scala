@@ -97,24 +97,25 @@ class PlanSpec extends SparkSpec {
     val weekly = graft.etl.Enrichment.weeklyAggregate(
       Tables.lineitem(spark, dir), col("l_shipdate"),
       Seq(col("l_partkey"), col("l_suppkey")), col("l_quantity"))
-    val plan = graft.operators.FeatureStore.wide(weekly,
-      Seq("l_partkey", "l_suppkey"), "week_start", "qty_sum")
-      .queryExecution.executedPlan.toString
-    // Exchange budget: 1 weekly-grain groupBy (fact) + the EWMA kernel's
-    // narrow repartition + 1 series exchange for the window families
-    // (the kernel's MapPartitions erases partitioning metadata, so the
-    // windows re-shuffle — measured cheaper than the 2-exchange
-    // kernel-last order, which pays the wide-row encoder tax; see
-    // FeatureStore doc). ~60 window columns must NOT each add an
-    // exchange.
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges <= 3, s"$exchanges exchanges:\n$plan")
-    // and the no-kernel variant is exactly the two relational exchanges
-    val plainPlan = graft.operators.FeatureStore.wide(weekly,
-      Seq("l_partkey", "l_suppkey"), "week_start", "qty_sum", withEwma = false)
-      .queryExecution.executedPlan.toString
-    val plainExchanges = "Exchange hashpartitioning".r.findAllIn(plainPlan).length
-    assert(plainExchanges <= 2, s"$plainExchanges exchanges:\n$plainPlan")
+    def count(plan: String, node: String) = s"(?m)^[ :|+-]*$node\\b".r.findAllIn(plan).length
+    for (withEwma <- Seq(true, false)) {
+      val plan = graft.operators.FeatureStore.wide(weekly,
+        Seq("l_partkey", "l_suppkey"), "week_start", "qty_sum", withEwma = withEwma)
+        .queryExecution.executedPlan.toString
+      // Exchange budget: 1 weekly-grain groupBy (fact) + 1 series
+      // exchange that every window family (EWMA's native window
+      // aggregate included) shares. ~110 window columns must NOT each
+      // add an exchange.
+      val exchanges = count(plan, "Exchange hashpartitioning")
+      assert(exchanges <= 2, s"$exchanges exchanges (withEwma=$withEwma):\n$plan")
+      // one projection per dependency level (FeatureStore doc): at most
+      // 7 Window operators and 2 sorts, (keys, week) and (keys, qty,
+      // week). A withColumn per column planned 13 Windows and 3 sorts.
+      val windows = count(plan, "Window")
+      assert(windows <= 7, s"$windows Window operators (withEwma=$withEwma):\n$plan")
+      val sorts = count(plan, "Sort")
+      assert(sorts <= 2, s"$sorts sorts (withEwma=$withEwma):\n$plan")
+    }
   }
 
   test("sessionization: lag + running session counter share ONE user exchange") {
